@@ -45,31 +45,3 @@ def cents_np(values, scale: int = 100):
 
     v = np.asarray(values, dtype=np.float64)
     return (np.sign(v) * np.floor(np.abs(v) * scale + 0.5)).astype(np.int64)
-
-
-def sum_money(col: Column | str, alias: str, scale: int = 100) -> Column:
-    """Order-independent SUM over a 2-decimal double column, as double."""
-    return (F.sum(cents(col, scale)) / F.lit(float(scale))).alias(alias)
-
-
-def avg_money(col: Column | str, alias: str, scale: int = 100) -> Column:
-    """Order-independent AVG (exact int sum / count), as double."""
-    return (
-        F.sum(cents(col, scale)) / F.lit(float(scale)) / F.count(F.lit(1))
-    ).alias(alias)
-
-
-# --- matching oracle-SQL (DuckDB) emitters -------------------------------
-# Keep these textual twins next to the Column builders so the two sides
-# can never drift apart.
-
-def sql_cents(expr: str, scale: int = 100) -> str:
-    return f"CAST(ROUND(({expr}) * {scale}) AS BIGINT)"
-
-
-def sql_sum_money(expr: str, alias: str, scale: int = 100) -> str:
-    return f"SUM({sql_cents(expr, scale)}) / {float(scale)} AS {alias}"
-
-
-def sql_avg_money(expr: str, alias: str, scale: int = 100) -> str:
-    return f"SUM({sql_cents(expr, scale)}) / {float(scale)} / COUNT(*) AS {alias}"

@@ -63,19 +63,18 @@ from flink_snappydata_spark.specs.profiling_analytics import (  # noqa: F401
 # against their DuckDB oracles every pytest run, so driver-stamp
 # staleness never means unverified code, only an older driver receipt.
 #
-# Round-14 window (_HEAD, 50 names) — exactly the round-13 verdict's
-# task-1 directive: the 5 round-13 additions (never stamped; invariant
-# (b) puts new work first: the multi-stage CEP pair, the absence and
-# multistage stream→table loops, and the prebuilt-index IVFADC), the
-# 26 r09-stamped remainder (staleness 5 at r14 — cadence-due under
-# invariant (a): window_lag_lead … drift_streamed), and the 19
-# stalest r10-stamped queries in declaration order per (c) (all 50
-# r10 stamps share staleness 4, so declaration order is the tiebreak;
-# rollup_multires … mmr_select make the cut). After the driver stamps
-# this window every registered query has a green driver row inside
-# the threshold-5 cadence: stalest surviving stamps are the 31 r10
-# remainder (staleness 4 at r14), which follow any never-stamped r14
-# additions in _R15_QUEUE and rotate next round at staleness 5.
+# Round-15 window (_HEAD, 50 names): the 10 round-14 additions
+# (never stamped; invariant (b) puts new work first: the bounded-subrun,
+# relaxed-NFA and MATCH_RECOGNIZE family), the 31 r10-stamped
+# remainder (staleness 5 at r15 — cadence-due under invariant (a):
+# typo_pairs … funnel_latency), and the 9 stalest r11-stamped
+# queries in declaration order per (c) (all 50 r11 stamps share
+# staleness 4, so declaration order is the tiebreak; wordcount_batch …
+# dedup_exact make the cut). After the driver stamps this window every
+# registered query has a green driver row inside the threshold-5
+# cadence: stalest surviving stamps are the 41 r11 remainder
+# (staleness 4 at r15), which follow any never-stamped r15 additions in
+# _R16_QUEUE and rotate next round at staleness 5.
 #
 # All queue entries are fully verified locally every pytest run via
 # test_oracle_parity plus the per-op semantic suites — driver-stamp
@@ -87,73 +86,10 @@ from flink_snappydata_spark.specs.profiling_analytics import (  # noqa: F401
 #: max(stamp files)+1, so the suite a round ships stays green both
 #: before and after the driver writes its CORRECTNESS_r{N}.json — and
 #: goes red only if a round closes without rotating the window.
-_HEAD_ROUND = 14
+_HEAD_ROUND = 15
 
 _HEAD = [
-    # -- never stamped: the round-13 additions, r14-queue order --
-    "ivf_pq_prebuilt_topk",
-    "cep_multi_stage",
-    "cep_multi_stage_relaxed",
-    "absence_streamed",
-    "multistage_streamed",
-    # -- cadence-due: the 26 r09-stamped remainder (staleness 5) --
-    "window_lag_lead",
-    "window_range_frame",
-    "pivot_revenue",
-    "scalar_string",
-    "scalar_date",
-    "scalar_math",
-    "scalar_json",
-    "scalar_map",
-    "scalar_conditional",
-    "scalar_array",
-    "events_sliding_window",
-    "stream_join_rowlevel",
-    "interval_join",
-    "train_val_test_split",
-    "image_decode_stats",
-    "multimodal_features",
-    "seq_packing",
-    "global_index",
-    "shard_stats",
-    "doc_chunking",
-    "frequent_tokens",
-    "rollup_streamed",
-    "cms_streamed",
-    "ohlc_streamed",
-    "scd2_streamed",
-    "drift_streamed",
-    # -- rotation: 19 stalest r10-stamped, declaration order --
-    "rollup_multires",
-    "pq_adc_topk",
-    "random_projection",
-    "hard_negatives",
-    "inverted_index",
-    "cms_heavy_hitters",
-    "pagerank",
-    "retention_cohorts",
-    "ordered_funnel",
-    "events_mad_outliers",
-    "source_centroids",
-    "embedding_dim_stats",
-    "bloom_membership",
-    "latest_snapshot",
-    "timeline_gapfill",
-    "percentile_bands",
-    "vocab_growth",
-    "knn_accuracy",
-    "mmr_select",
-]
-
-#: The r15 stamp queue. Head: any round-14 additions (never stamped —
-#: rotation invariant (b) requires never-stamped queries to occupy the
-#: FIRST post-window slots; new queries register here, not at the
-#: tail). Then the 31 r10-stamped queries that did not fit in the r14
-#: window (staleness 5 at r15 — cadence-due under invariant (a)), in
-#: declaration order. All queue entries are oracle-verified locally
-#: every pytest run.
-_R15_QUEUE: list[str] = [
-    # -- round-14 additions (never stamped; new work drains first) --
+    # -- never stamped: the round-14 additions, r15-queue order --
     "cep_bounded_subrun",
     "match_recognize_funnel",
     "cep_relaxed_nfa",
@@ -164,7 +100,7 @@ _R15_QUEUE: list[str] = [
     "cep_iterative_condition",
     "match_recognize_prev",
     "match_recognize_measures",
-    # -- r10-stamped remainder (cadence-due at r15) --
+    # -- cadence-due: the 31 r10-stamped remainder (staleness 5) --
     "typo_pairs",
     "zorder_key",
     "event_rate_spikes",
@@ -196,20 +132,82 @@ _R15_QUEUE: list[str] = [
     "token_drift_topk",
     "rfm_segments",
     "funnel_latency",
+    # -- rotation: 9 stalest r11-stamped, declaration order --
+    "wordcount_batch",
+    "asof_join",
+    "pareto_frontier",
+    "events_tumbling_window",
+    "events_session_window",
+    "session_funnel",
+    "stream_stream_join",
+    "count_window",
+    "dedup_exact",
+]
+
+#: The r16 stamp queue. Head: any round-15 additions (never stamped —
+#: rotation invariant (b) requires never-stamped queries to occupy the
+#: FIRST post-window slots; new queries register here, not at the
+#: tail). Then the 41 r11-stamped queries that did not fit in the r15
+#: window (staleness 5 at r16 — cadence-due under invariant (a)), in
+#: declaration order. All queue entries are oracle-verified locally
+#: every pytest run.
+_R16_QUEUE: list[str] = [
+    # -- r11-stamped remainder (cadence-due at r16) --
+    "novelty_scores",
+    "dedup_ngram_jaccard",
+    "containment_pairs",
+    "decontamination",
+    "source_contamination",
+    "repeated_passages",
+    "dedup_clusters",
+    "dedup_minhash",
+    "dedup_simhash",
+    "ann_cosine_topk",
+    "embedding_neardup",
+    "semantic_decontamination",
+    "ann_lsh_neardup",
+    "ann_ivf_topk",
+    "ann_ivf_trained",
+    "text_token_count",
+    "text_quality",
+    "doc_fingerprint",
+    "winnowing_fingerprints",
+    "winnowing_pairs",
+    "curation_pipeline",
+    "leakage_safe_split",
+    "token_budget_mix",
+    "audio_decode_stats",
+    "audio_silence_stats",
+    "video_decode_stats",
+    "seasonal_anomaly",
+    "email_domain_stats",
+    "source_token_entropy",
+    "source_tv_distance",
+    "ngram_diversity",
+    "benford_audit",
+    "bpe_encode_stats",
+    "tokenizer_fertility",
+    "type_lag_correlation",
+    "scd2_state_intervals",
+    "rolling_active_users",
+    "activity_gini",
+    "embedding_top_pc",
+    "zipf_fit",
+    "html_clean",
 ]
 
 _TAIL: list[str] = []
 
 
 def _reorder() -> None:
-    order = _HEAD + _R15_QUEUE + _TAIL
+    order = _HEAD + _R16_QUEUE + _TAIL
     missing = [n for n in order if n not in QUERIES]
     if missing:  # pragma: no cover - guards registry edits
         raise KeyError(f"unknown registry entries in order lists: {missing}")
     middle = [
-        n for n in QUERIES if n not in _HEAD and n not in _R15_QUEUE and n not in _TAIL
+        n for n in QUERIES if n not in _HEAD and n not in _R16_QUEUE and n not in _TAIL
     ]
-    ordered = {n: QUERIES[n] for n in _HEAD + _R15_QUEUE + middle + _TAIL}
+    ordered = {n: QUERIES[n] for n in _HEAD + _R16_QUEUE + middle + _TAIL}
     # Reorder IN PLACE: QUERIES is the same dict object the specs
     # package exports, so mutating (rather than rebinding) keeps
     # specs.QUERIES and registry.QUERIES identical — any importer sees

@@ -190,7 +190,9 @@ def run_to_memory_sink(
     return q
 
 
-def land_batch_partition(df: DataFrame, table: str, batch_id: int) -> None:
+def land_batch_partition(
+    df: DataFrame, table: str, batch_id: int, floor: int | None = None
+) -> None:
     """Idempotently land one micro-batch's rows as partition
     ``batch_id=N`` of a managed catalog table. First write creates the
     table partitioned by ``batch_id``; later writes use dynamic
@@ -199,14 +201,47 @@ def land_batch_partition(df: DataFrame, table: str, batch_id: int) -> None:
     (a foreachBatch retry) rewrites its own partition instead of
     appending a duplicate copy. The dynamic-overwrite conf is set on
     the frame's own session (inside foreachBatch that is the per-batch
-    cloned session, so the setting cannot leak to the parent)."""
+    cloned session, so the setting cannot leak to the parent).
+
+    ``floor`` (compacting loops, :func:`ingest_stream_to_tables`) adds
+    a second partition column, so the partition ``batch_id=N/floor=F``
+    the write commits also publishes the floor in the catalog's
+    partition listing."""
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+    parts = ["batch_id"]
+    if floor is not None:
+        out = out.withColumn("floor", F.lit(floor).cast("long"))
+        parts.append("floor")
     if spark.catalog.tableExists(table):
         out.write.mode("overwrite").insertInto(table)
     else:
-        out.write.partitionBy("batch_id").saveAsTable(table)
+        out.write.partitionBy(*parts).saveAsTable(table)
+
+
+def _floor_partitions(spark, table: str) -> list[tuple[int, int]]:
+    """``(batch_id, floor)`` of every partition of a floor-mode state
+    table, parsed from ``SHOW PARTITIONS`` — a driver-side catalog
+    listing, no Spark job."""
+    rows = spark.sql(f"SHOW PARTITIONS {table}").collect()
+    specs = [dict(kv.split("=", 1) for kv in r[0].split("/")) for r in rows]
+    return [(int(p["batch_id"]), int(p["floor"])) for p in specs]
+
+
+def _require_floor_layout(df: DataFrame, table: str) -> None:
+    """Partition columns come last in a catalog table's schema, so a
+    floor-mode table ends ``batch_id, floor``. A table that ends
+    ``floor, batch_id`` was landed with ``floor`` as a data column: its
+    floor is not in the partition listing, and reading or appending to
+    it as if it were would ignore the floor (or, through the positional
+    ``insertInto``, swap the two columns)."""
+    if df.columns[-2:] != ["batch_id", "floor"]:
+        raise ValueError(
+            f"state table {table!r} carries 'floor' as a data column; "
+            "floor-mode state tables are partitioned by (batch_id, floor). "
+            "Re-ingest it into a new table with a new checkpoint."
+        )
 
 
 def ingest_stream_to_tables(
@@ -248,16 +283,23 @@ def ingest_stream_to_tables(
     plus the current batch through the caller's ``compact`` callable
     (state-frame -> state-frame, same schema — e.g. the session
     fragment sweep-merge) and lands the result in the CURRENT batch's
-    partition with a ``floor`` column stamped to this batch_id; normal
-    batches stamp ``floor=0``. Readers (:func:`read_state_table`)
-    keep only partitions ``batch_id >= max(floor)``, so a compaction
-    supersedes everything before it ATOMICALLY with its own landing —
-    one dynamic-partition write is the only state mutation, making a
-    retried compaction batch recompute byte-identical output from the
-    untouched pre-floor partitions (the exactly-once argument above,
-    unchanged). Superseded partitions are dropped lazily AFTER the
-    landing commits — pure space reclamation; a crash mid-drop leaves
-    rows every reader and every future compaction already ignores.
+    partition with floor = this batch_id; normal batches land with
+    floor = 0. ``floor`` is a second PARTITION column next to
+    ``batch_id``, so the one dynamic-partition write that commits a
+    compaction also publishes its floor in the catalog. Readers
+    (:func:`read_state_table`) and the next compaction take the floor
+    (largest listed ``floor``) and the newest batch id from the
+    driver-side partition listing and scan only ``floor <= batch_id <=
+    newest`` — a literal partition filter, no Spark job to find it. A
+    compaction therefore supersedes everything before it ATOMICALLY
+    with its own landing, and a retried compaction batch recomputes
+    byte-identical output from the untouched pre-floor partitions (the
+    exactly-once argument above, unchanged). Superseded partitions are
+    dropped lazily AFTER the landing commits, and only those below the
+    PREVIOUS floor — pure space reclamation; a crash mid-drop leaves
+    rows every reader and every future compaction already ignores, and
+    a read listed before a compaction landed still finds every
+    partition it listed.
 
     TIERED COMPACTION (``compact_mode="tiered"``): the floor mode
     above rewrites the ENTIRE live state every ``compact_every``
@@ -299,6 +341,10 @@ def ingest_stream_to_tables(
         )
     if compact_mode not in ("floor", "tiered"):
         raise ValueError(f"compact_mode must be floor|tiered: {compact_mode!r}")
+    if compact is not None and compact_mode == "floor":
+        spark = stream_df.sparkSession
+        if spark.catalog.tableExists(outputs[0][0]):
+            _require_floor_layout(spark.table(outputs[0][0]), outputs[0][0])
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         base = prepare(batch_df) if prepare is not None else batch_df
@@ -325,40 +371,36 @@ def ingest_stream_to_tables(
     def _ingest_compacting(base: DataFrame, batch_id: int) -> None:
         table = outputs[0][0]
         spark = base.sparkSession
-        out = base.withColumn("floor", F.lit(0).cast("long"))
+        out, floor = base, 0
         is_compaction = (
             batch_id > 0
             and batch_id % compact_every == 0
             and spark.catalog.tableExists(table)
         )
-        prev_floor = 0
         if is_compaction:
             # Pre-floor state only, and NEVER this batch's own partition
             # (a retry may have left a partial/complete one — the
             # recompute must not read its own prior output).
-            state = spark.table(table).filter(F.col("batch_id") < batch_id)
-            # bounded driver fetch: one scalar (the current floor)
-            prev_floor = (
-                state.agg(F.max("floor")).collect()[0][0] or 0
-            )
+            earlier = [
+                p for p in _floor_partitions(spark, table) if p[0] < batch_id
+            ]
+            prev_floor = max((f for _, f in earlier), default=0)
             live = (
-                state.filter(F.col("batch_id") >= prev_floor)
+                spark.table(table)
+                .filter(F.col("batch_id").between(prev_floor, batch_id - 1))
                 .drop("batch_id", "floor")
             )
-            out = compact(live.unionByName(base)).withColumn(
-                "floor", F.lit(batch_id).cast("long")
-            )
-        land_batch_partition(out, table, batch_id)
+            out, floor = compact(live.unionByName(base)), batch_id
+        land_batch_partition(out, table, batch_id, floor=floor)
         if is_compaction:
             # lazy space reclamation of partitions no reader can see
             # (floor is now batch_id; anything below prev_floor was
             # already invisible before this compaction committed)
-            for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-                pid = int(row[0].split("=", 1)[1])
+            for pid, fl in earlier:
                 if pid < prev_floor:
                     spark.sql(
                         f"ALTER TABLE {table} DROP IF EXISTS "
-                        f"PARTITION (batch_id={pid})"
+                        f"PARTITION (batch_id={pid}, floor={fl})"
                     )
 
     def _ingest_tiered(base: DataFrame, batch_id: int) -> None:
@@ -469,16 +511,26 @@ def land_tiered_partition(
 
 def read_state_table(spark, table: str) -> DataFrame:
     """Open an ingest-loop state table for folding: strips the
-    ``batch_id`` lineage column and, when the loop compacts (``floor``
-    column present), keeps only the live rows ``batch_id >=
-    max(floor)`` — the partitions at or after the latest compaction.
-    For TIERED loops (``covered_to`` column present) the live rows are
-    every merged row (``covered_to > 0``) plus the raw rows newer than
-    the latest merge boundary (``batch_id > max(covered_to)``). Either
-    scalar is a broadcast one-row aggregate joined into the scan, not
-    a driver collect, so the read stays one distributed plan. Tables
-    from non-compacting loops pass through unfiltered — same behavior
-    as the plain ``drop``."""
+    lineage columns and keeps only the live rows.
+
+    Floor-mode compacting loops (``floor`` partition column): the floor
+    (largest listed ``floor``) and the newest batch id come from the
+    table's partition listing on the driver, with no Spark job, and
+    the scan keeps only ``floor <= batch_id <= newest`` as a literal
+    partition filter. The upper bound makes the read a consistent
+    snapshot as of the listing: a compaction that lands between the
+    listing and the scan sits above ``newest`` and cannot double-count,
+    and its lazy drop only removes partitions below the floor this
+    read already skips. A table that carries ``floor`` as a data
+    column (landed before the floor became a partition column) raises
+    instead of being read with its floor ignored.
+
+    TIERED loops (``covered_to`` column): every merged row
+    (``covered_to > 0``) plus the raw rows newer than the latest merge
+    boundary (``batch_id > max(covered_to)``); the boundary is a
+    broadcast one-row aggregate joined into the scan, so the read
+    stays one distributed plan. Tables from non-compacting loops pass
+    through unfiltered — same behavior as the plain ``drop``."""
     df = spark.table(table)
     if "covered_to" in df.columns:
         # plain max() so the subquery stays parquet-aggregate-pushdown
@@ -499,12 +551,13 @@ def read_state_table(spark, table: str) -> DataFrame:
         )
     if "floor" not in df.columns:
         return df.drop("batch_id")
-    fl = df.groupBy().agg(F.max("floor").alias("_fl"))
-    return (
-        df.join(F.broadcast(fl))
-        .filter(F.col("batch_id") >= F.coalesce(F.col("_fl"), F.lit(0)))
-        .drop("batch_id", "floor", "_fl")
-    )
+    _require_floor_layout(df, table)
+    parts = _floor_partitions(spark, table)
+    if parts:
+        floor = max(f for _, f in parts)
+        newest = max(b for b, _ in parts)
+        df = df.filter(F.col("batch_id").between(floor, newest))
+    return df.drop("batch_id", "floor")
 
 
 def stream_to_table(

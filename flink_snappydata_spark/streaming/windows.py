@@ -165,19 +165,17 @@ def rollup_multires(events: DataFrame) -> DataFrame:
     identical in Spark and ANSI engines).
 
     Scale: raw events are scanned ONCE — the hourly aggregate is
-    computed first (partial aggs combine map-side), persisted, and the
-    day and week grains FOLD THE HOURLY ROLLUP, not the raw table:
-    counts add and cent-sums add, so coarsening is a tiny aggregation
-    over (hours × types) rows. At 100 TB the raw scan dominates and
-    happens exactly once; the two re-aggregations touch data three
-    orders of magnitude smaller. The exact cent sums make the fold
-    lossless (double sums would drift between the direct and folded
-    spellings).
+    computed first (partial aggs combine map-side), and the hour, day
+    and week grains then come out of ONE aggregation over that hourly
+    rollup (:func:`_fold_grains`: each hourly row is exploded into its
+    three grain keys), not the raw table: counts add and cent-sums add,
+    so coarsening is a tiny aggregation over (hours × types) rows. At
+    100 TB the raw scan dominates and happens exactly once; the fold
+    touches data three orders of magnitude smaller, in one more
+    shuffle. The exact cent sums make the fold lossless (double sums
+    would drift between the direct and folded spellings).
     """
-    from flink_snappydata_spark.util import tracked_persist
-
-    hourly = tracked_persist(_hourly_rollup(events))
-    return _multires_from_hourly(hourly)
+    return _fold_grains(_hourly_rollup(events))
 
 
 def _hourly_rollup(events: DataFrame) -> DataFrame:
@@ -192,31 +190,45 @@ def _hourly_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def _multires_from_hourly(hourly: DataFrame) -> DataFrame:
-    """Fold an hourly rollup into the tagged hour/day/week frame —
-    shared by the batch op and the streaming state fold."""
-
-    def _coarsen(grain: str) -> DataFrame:
-        return hourly.groupBy(
-            F.date_trunc(grain, F.col("bucket_start")).alias("bucket_start"),
-            "event_type",
-        ).agg(
+def _fold_grains(partials: DataFrame) -> DataFrame:
+    """Fold hour-grain partials ``(bucket_start, event_type, n_events,
+    sum_cents)`` — any number of rows per (hour, type) — into the
+    tagged hour/day/week frame with ONE aggregation: each partial row
+    is exploded into its three grain keys ``(grain, date_trunc(grain,
+    bucket_start))``, so all three grains share one shuffle, and the
+    int64 cent sums stay exact. Shared by the batch op and the
+    streaming state fold. The result is bucket-bounded, so it is
+    ordered in one partition (``coalesce(1).sortWithinPartitions``)
+    instead of by a global range sort, which would cost a sampling job
+    and a second shuffle."""
+    keys = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(g).alias("grain"),
+                    F.date_trunc(g, F.col("bucket_start")).alias("bucket_start"),
+                )
+                for g in ("hour", "day", "week")
+            ]
+        )
+    ).alias("k")
+    return (
+        partials.select(keys, "event_type", "n_events", "sum_cents")
+        .groupBy("k.grain", "k.bucket_start", "event_type")
+        .agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_cents").alias("sum_cents"),
         )
-
-    tagged = (
-        hourly.withColumn("grain", F.lit("hour"))
-        .unionByName(_coarsen("day").withColumn("grain", F.lit("day")))
-        .unionByName(_coarsen("week").withColumn("grain", F.lit("week")))
+        .select(
+            "grain",
+            "bucket_start",
+            "event_type",
+            "n_events",
+            (F.col("sum_cents") / F.lit(100.0)).alias("sum_value"),
+        )
+        .coalesce(1)
+        .sortWithinPartitions("grain", "bucket_start", "event_type")
     )
-    return tagged.select(
-        "grain",
-        "bucket_start",
-        "event_type",
-        "n_events",
-        (F.col("sum_cents") / F.lit(100.0)).alias("sum_value"),
-    ).orderBy("grain", "bucket_start", "event_type")
 
 
 def streaming_rollup_ingest(
@@ -272,22 +284,17 @@ def compact_rollup_partials(parts: DataFrame) -> DataFrame:
 
 def rollup_from_state(spark, hourly_table: str) -> DataFrame:
     """Multi-resolution rollup from the hourly partials accumulated by
-    :func:`streaming_rollup_ingest`: fold partials per (hour, type)
-    (exact int64 cent sums — batching order irrelevant), then the same
-    coarsening as the batch op. Reads through the floor-aware
-    :func:`~flink_snappydata_spark.streaming.runtime.read_state_table`
-    (the loop compacts; lineage columns stripped there)."""
+    :func:`streaming_rollup_ingest`: the live partials — read through
+    :func:`~flink_snappydata_spark.streaming.runtime.read_state_table`,
+    whose floor and newest batch id come from the partition listing and
+    bound the scan as a partition filter — go straight into the
+    one-shuffle grain fold (:func:`_fold_grains`), which also folds
+    the several partials of one (hour, type) (exact int64 cent sums —
+    batching order irrelevant). Two Spark jobs: the scan with its
+    partial aggregate, and the final aggregate with the sort."""
     from flink_snappydata_spark.streaming.runtime import read_state_table
 
-    hourly = (
-        read_state_table(spark, hourly_table)
-        .groupBy("bucket_start", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
-    )
-    return _multires_from_hourly(hourly)
+    return _fold_grains(read_state_table(spark, hourly_table))
 
 
 def session_paths(

@@ -140,7 +140,47 @@ SLOW_NODE_IDS = {
 }
 
 
+def unmatched_slow_ids(entries, collected, whole_paths, rootdir) -> list[str]:
+    """``SLOW_NODE_IDS`` entries that should have been collected but
+    were not: the entry's file lies under a path collected in full
+    (a command-line directory or file, not a node id) and either no
+    longer exists or yielded tests of which the entry is not one.
+    Files that yielded no test at all (a collection error) are left
+    to the collection-error report."""
+    collected_files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    unmatched = []
+    for entry in sorted(entries):
+        rel = entry.split("::", 1)[0]
+        path = os.path.join(rootdir, rel)
+        if entry in collected or not any(
+            os.path.commonpath([path, w]) == w for w in whole_paths
+        ):
+            continue
+        if not os.path.exists(path) or rel in collected_files:
+            unmatched.append(entry)
+    return unmatched
+
+
 def pytest_collection_modifyitems(config, items):
+    # Runs before pytest's own -k/-m/--deselect filtering, so `items` is
+    # everything the command line collected.
     for item in items:
         if item.nodeid in SLOW_NODE_IDS:
             item.add_marker(pytest.mark.slow)
+    cwd = str(config.invocation_params.dir)
+    whole = [
+        os.path.abspath(os.path.join(cwd, a))
+        for a in config.args
+        if "::" not in a
+    ]
+    unmatched = unmatched_slow_ids(
+        SLOW_NODE_IDS,
+        {item.nodeid for item in items},
+        whole,
+        str(config.rootpath),
+    )
+    if unmatched:
+        raise pytest.UsageError(
+            "tests/conftest.py SLOW_NODE_IDS names tests that were not "
+            "collected (renamed or deleted?): " + ", ".join(unmatched)
+        )

@@ -620,6 +620,184 @@ def test_land_batch_partition_retry_is_idempotent(spark):
     spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+# --- floor-mode compaction: the floor as a partition column
+
+
+def _rollup_source(spark, tmp_path, n_files):
+    """The smoke events as ``n_files`` parquet files, streamed one file
+    per micro-batch."""
+    ev = load_table(spark, SF_SMOKE, "events").select(
+        "event_id", "ts", "event_type", "value"
+    )
+    src = str(tmp_path / "src")
+    ev.repartition(n_files).write.mode("overwrite").parquet(src)
+
+    def stream():
+        return (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    return ev, stream
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def _partitions(spark, table):
+    return sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+
+
+def test_compaction_reland_is_idempotent(spark, tmp_path):
+    """Re-landing a compaction batch (same batch_id, same floor — a
+    retried foreachBatch) replaces its own ``batch_id=N/floor=N``
+    partition: the partition set and the folded rollup are unchanged.
+    And a read is a snapshot as of its partition listing: a compaction
+    that lands between the listing and the scan is not counted."""
+    import uuid
+
+    from flink_snappydata_spark.streaming import windows as stream_windows
+
+    ev, stream = _rollup_source(spark, tmp_path, 4)
+    t = f"reland_{uuid.uuid4().hex[:8]}"
+    try:
+        stream_windows.streaming_rollup_ingest(
+            stream(), t, checkpoint=str(tmp_path / "ckpt"), compact_every=2
+        )
+        parts = _partitions(spark, t)
+        assert "batch_id=2/floor=2" in parts
+        before = _rows(stream_windows.rollup_from_state(spark, t))
+        assert before == _rows(stream_windows.rollup_multires(ev))
+        landed = spark.table(t).filter("batch_id = 2").drop("batch_id", "floor")
+        # a local copy: a write may not read the partition it overwrites
+        again = spark.createDataFrame(landed.collect(), landed.schema)
+        runtime.land_batch_partition(again, t, 2, floor=2)
+        spark.catalog.refreshTable(t)
+        assert _partitions(spark, t) == parts
+        assert _rows(stream_windows.rollup_from_state(spark, t)) == before
+        listed = stream_windows.rollup_from_state(spark, t)
+        # a later compaction carrying the whole live state lands meanwhile
+        live = runtime.read_state_table(spark, t)
+        live = spark.createDataFrame(live.collect(), live.schema)
+        runtime.land_batch_partition(live, t, 4, floor=4)
+        spark.catalog.refreshTable(t)
+        assert _rows(listed) == before
+        assert _rows(stream_windows.rollup_from_state(spark, t)) == before
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_restart_between_compaction_landing_and_drop(
+    spark, tmp_path, monkeypatch
+):
+    """A stream that stops after a compaction has landed but before
+    its lazy partition drop leaves superseded partitions behind that
+    the floor already hides; restarted from its checkpoint, the
+    compaction batch recomputes the same partition, the drop runs, and
+    the fold still equals the batch rollup."""
+    import uuid
+
+    from flink_snappydata_spark.streaming import windows as stream_windows
+
+    ev, stream = _rollup_source(spark, tmp_path, 6)
+    t = f"crash_{uuid.uuid4().hex[:8]}"
+    ckpt = str(tmp_path / "ckpt")
+    land = runtime.land_batch_partition
+
+    def land_then_crash(df, table, batch_id, floor=None):
+        land(df, table, batch_id, floor=floor)
+        if floor == 4:
+            raise RuntimeError("injected crash after the compaction landed")
+
+    try:
+        monkeypatch.setattr(runtime, "land_batch_partition", land_then_crash)
+        with pytest.raises(Exception, match="injected crash"):
+            stream_windows.streaming_rollup_ingest(
+                stream(), t, checkpoint=ckpt, compact_every=2
+            )
+        monkeypatch.undo()
+        spark.catalog.refreshTable(t)
+        crashed = _partitions(spark, t)
+        # landed, not yet reclaimed: batches 0-1 sit below the old floor 2
+        assert "batch_id=4/floor=4" in crashed
+        assert "batch_id=0/floor=0" in crashed
+        stream_windows.streaming_rollup_ingest(
+            stream(), t, checkpoint=ckpt, compact_every=2
+        )
+        assert _partitions(spark, t) == [
+            "batch_id=2/floor=2",
+            "batch_id=3/floor=0",
+            "batch_id=4/floor=4",
+            "batch_id=5/floor=0",
+        ]
+        got = _rows(stream_windows.rollup_from_state(spark, t))
+        assert got == _rows(stream_windows.rollup_multires(ev))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_floor_as_data_column_is_refused(spark, tmp_path):
+    """A floor-mode table landed with ``floor`` as a data column (no
+    floor in its partition spec) is refused by the reader and by the
+    ingest loop — never read or appended to with its floor ignored."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from flink_snappydata_spark.streaming import windows as stream_windows
+
+    t = f"oldfloor_{uuid.uuid4().hex[:8]}"
+    old = spark.createDataFrame(
+        [("2024-01-01 00:00:00", "click", 1, 100)],
+        "bucket_start string, event_type string, n_events long,"
+        " sum_cents long",
+    ).withColumn("bucket_start", F.to_timestamp("bucket_start"))
+    try:
+        runtime.land_batch_partition(
+            old.withColumn("floor", F.lit(0).cast("long")), t, 0
+        )
+        with pytest.raises(ValueError, match="'floor' as a data column"):
+            stream_windows.rollup_from_state(spark, t)
+        _, stream = _rollup_source(spark, tmp_path, 2)
+        with pytest.raises(ValueError, match="'floor' as a data column"):
+            stream_windows.streaming_rollup_ingest(
+                stream(), t, checkpoint=str(tmp_path / "ckpt")
+            )
+        assert spark.table(t).count() == 1
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_rollup_from_state_plan_is_one_shuffle_with_partition_floor(
+    spark, tmp_path
+):
+    """The state read's plan on a compacted table: the floor and the
+    newest batch id reach the scan as literal partition filters (no
+    broadcast one-row aggregate join), and the three grains share one
+    shuffle."""
+    import uuid
+
+    from flink_snappydata_spark.plans import inspect as plans
+    from flink_snappydata_spark.streaming import windows as stream_windows
+
+    _, stream = _rollup_source(spark, tmp_path, 5)
+    t = f"plan_{uuid.uuid4().hex[:8]}"
+    try:
+        stream_windows.streaming_rollup_ingest(
+            stream(), t, checkpoint=str(tmp_path / "ckpt"), compact_every=2
+        )
+        df = stream_windows.rollup_from_state(spark, t)
+        assert plans.exchange_count(df) == 1
+        assert "BroadcastNestedLoopJoin" not in plans.formatted_plan(df)
+        bounds = [f for f in plans.partition_filters(df) if "batch_id" in f]
+        assert any(">= 4)" in f for f in bounds), bounds
+        assert any("<= 4)" in f for f in bounds), bounds
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_stream_to_table_checkpoint_resume_appends_nothing(spark):
     """Exactly-once across RESTARTS, the other half of the idempotency
     story: re-running a drained availableNow ingest with the SAME
